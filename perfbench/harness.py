@@ -4,18 +4,24 @@ One client runs one op at a time (closed loop). A run is always the
 same sequence:
 
 1. ``SETUPS`` set-ups: start a SparkSession and load the workload's
-   prepared state. The first starts the JVM; later ones stop the
+   prepared state. The first launches the JVM; later ones stop the
    session and start a new one in the same JVM. ``setup_s`` is the
-   median, so one slow JVM launch does not decide it.
-2. Untimed warm-up ops until the op time levels off (or the
-   workload's cap is reached); the count is recorded.
+   median, i.e. a session start in a running JVM plus the state load;
+   the JVM launch is reported only per layer (``session.cold_start_s``).
+2. The workload's untimed warm-up, then ``warmup_rounds`` untimed
+   rounds: as many as the op time took to level off in probe runs
+   (see README.md), the same count every run. The count and the
+   round times are recorded.
 3. Timed ops until ``--seconds`` have passed, in whole rounds (one op,
    or one pass over the workload's op list), at least ``MIN_ROUNDS``.
    A JVM and a Python GC run between ops, outside the timed window.
+4. The untimed once-per-run output check.
 
 With ``--trace 1`` Spark writes an event log and every call into a
 layer runs in its own job group, so the log can bill executor, GC,
 shuffle and Python-worker cost to the layer (see ``eventlog.py``).
+A traced run then also runs the workload's ``traced_ops()``, work
+whose layers are measured but which no end-to-end metric times.
 """
 
 from __future__ import annotations
@@ -28,27 +34,23 @@ import sys
 import threading
 import time
 from contextlib import contextmanager
-from dataclasses import dataclass, field
 
-from proctree import ProcTree
+from proctree import ProcTree, steal
 import eventlog
 
 SETUPS = 3
-MIN_ROUNDS = 3  # timed rounds at least: an odd count, so the median is one op
-LEVEL_OFF = 0.10  # consecutive warm-up ops within 10% = levelled off
+MIN_ROUNDS = 2  # timed rounds at least
 DRIVER_MEM = "4g"
 OFFHEAP_MEM = "1g"
+RSS_PERIOD = 0.05
 
 
-@dataclass
 class Host:
-    """Host fit, printed with every run."""
+    """Host fit, applied before the JVM starts and printed with every run."""
 
-    root: str
-    work: str
-    cores: int = field(default_factory=lambda: len(os.sched_getaffinity(0)))
-    driver_mem: str = DRIVER_MEM
-    offheap_mem: str = OFFHEAP_MEM
+    def __init__(self, root: str, work: str):
+        self.root, self.work = root, work
+        self.cores = len(os.sched_getaffinity(0))
 
     def apply(self) -> None:
         local = os.path.join(self.work, "spark-local")
@@ -56,8 +58,8 @@ class Host:
         for d in (local, tmp):
             os.makedirs(d, exist_ok=True)
         os.environ.update({
-            "SPARK_DRIVER_MEM": self.driver_mem,
-            "SPARK_OFFHEAP_MEM": self.offheap_mem,
+            "SPARK_DRIVER_MEM": DRIVER_MEM,
+            "SPARK_OFFHEAP_MEM": OFFHEAP_MEM,
             "SPARK_LOCAL_DIRS": local,
             "TMPDIR": tmp,
             # mapInPandas workers import the engine package by name
@@ -66,8 +68,8 @@ class Host:
         })
 
     def describe(self) -> dict:
-        return {"cores": self.cores, "driver_mem": self.driver_mem,
-                "offheap_mem": self.offheap_mem,
+        return {"cores": self.cores, "driver_mem": DRIVER_MEM,
+                "offheap_mem": OFFHEAP_MEM,
                 "local_dirs": os.environ.get("SPARK_LOCAL_DIRS")}
 
 
@@ -100,10 +102,10 @@ class Tracer:
 
 
 class RssPeak:
-    """Peak RSS of the process tree, sampled every ``period`` seconds."""
+    """Peak RSS of the process tree, sampled every ``RSS_PERIOD`` seconds."""
 
-    def __init__(self, tree: ProcTree, period: float = 0.05):
-        self.tree, self.period = tree, period
+    def __init__(self, tree: ProcTree):
+        self.tree = tree
         self._peak = 0
         self._lock = threading.Lock()
         self._stop = threading.Event()
@@ -114,7 +116,7 @@ class RssPeak:
             rss = self.tree.sample()[1]
             with self._lock:
                 self._peak = max(self._peak, rss)
-            self._stop.wait(self.period)
+            self._stop.wait(RSS_PERIOD)
 
     def take(self) -> int:
         """Peak since the previous ``take()``."""
@@ -219,18 +221,17 @@ class Runner:
         self.tracer.phase = "warmup"
         warm = self.wl.warmup()
         rounds = []
-        for _ in range(self.wl.max_warmup):
+        for _ in range(self.wl.warmup_rounds):
             t = 0.0
             for _ in range(self.wl.round_ops):
                 t += self._op()[0]
                 self._between_ops()
             rounds.append(t)
-            if len(rounds) >= 2 and abs(t / rounds[-2] - 1) <= LEVEL_OFF:
-                break
         warm += len(rounds) * self.wl.round_ops
         phases["warmup"] = time.perf_counter()
         self.tracer.phase = "timed"
         tree = ProcTree()
+        steal0 = steal()
         times, cpus, peaks, turns, oks = [], [], [], [], []
         with RssPeak(ProcTree()) as rss:
             t_end = time.perf_counter() + seconds
@@ -247,22 +248,26 @@ class Runner:
                 oks.append(ok)
                 self._between_ops()
         phases["timed"] = time.perf_counter()
+        steal1 = steal()
         self.tracer.phase = "check"
         final_ok = self.wl.final_check()
         phases["check"] = time.perf_counter()
 
         n = len(times)
-        failed = oks.count(False)
         e2e = {
             "setup_s": (median(setups), "s"),
             "op_s_p50": (median(times), "s"),
             "cpu_s_per_op": (sum(cpus) / n, "s"),
             "peak_rss_mb": (median(peaks) / 1e6, "MB"),
-            "ops_ok_frac": (1 - failed / n, "fraction"),
+            "ops_ok_frac": (oks.count(True) / n, "fraction"),
         }
         e2e.update(self.wl.e2e_metrics(times, turns))
         layers = {}
         if self.trace:
+            traced_oks, traced_final_ok = self.wl.traced_ops()
+            oks += traced_oks
+            final_ok &= traced_final_ok
+            phases["traced_ops"] = time.perf_counter()
             app_id = self.spark.sparkContext.applicationId
             self._shutdown()
             groups = eventlog.parse(os.path.join(self.eventlog_dir, app_id))
@@ -274,13 +279,16 @@ class Runner:
             layers["trace.op_s_p50"] = (median(times), "s")
         else:
             self._shutdown()
+        failed = oks.count(False)
         return {
             "correct": final_ok and failed == 0,
-            "attempted": n,
+            "attempted": len(oks),
             "failed": failed,
             "e2e": e2e,
             "layers": layers,
             "info": {"warmup_ops": warm, "timed_ops": n,
+                     "timed_steal_frac": round(
+                         (steal1[1] - steal0[1]) / (steal1[0] - steal0[0]), 4),
                      "warmup_round_s": [round(t, 3) for t in rounds],
                      "op_s": [round(t, 3) for t in times],
                      "phase_s": {k: round(phases[k] - phases[p], 2)
@@ -289,9 +297,9 @@ class Runner:
 
 
 def layer_row(groups: dict, layer: str, n_ops: int) -> dict:
-    """The common per-layer row, per timed op."""
+    """The common per-layer row, per timed op of the layer."""
     g = groups.get(f"timed:{layer}", eventlog.GroupTotals())
     units = {"jobs": "count", "tasks": "count", "shuffle_write_mb": "MB",
-             "spill_mb": "MB", "arrow_mb": "MB"}
+             "spill_mb": "MB"}
     return {f"{layer}.{k}": (v / n_ops, units.get(k, "s"))
             for k, v in g.as_dict().items() if k != "arrow_mb"}

@@ -9,11 +9,12 @@ touches the JVM that is measured. ``DIR`` appears only when complete
 leaves no half-written cache entry.
 
 - ``transcripts``: ``transcripts.parquet`` holds the first conversations
-  totalling at least ``size`` turns. The refresh workload splits the
-  same rows into ``bronze.parquet`` (event time before day 20) and
+  totalling at least ``size`` turns. The write path splits the same
+  rows into ``bronze.parquet`` (event time before day 20) and
   ``slice_<k>.parquet``: the following turns in event-time order, cut
-  into slices of 1/120 of the month's turns each (six hours on
-  average), so every append is the same size whatever the seed.
+  into ``N_SLICES`` slices of 1/120 of the month's turns each (six
+  hours on average), so every append is the same size whatever the
+  seed.
 - ``sf``: ``events.parquet`` with ``size`` rows and ``documents.parquet``
   with ``size // DOCS_PER_EVENT`` rows, the two tables the registry
   queries of the query suite read.
@@ -36,7 +37,7 @@ import inputs  # noqa: E402
 
 BRONZE_DAYS = 20
 SLICES_PER_MONTH = 120
-N_SLICES = 16
+N_SLICES = 1  # write-path cycles of a traced tier_rollup run
 DOCS_PER_EVENT = 20
 
 

@@ -34,16 +34,24 @@ def _stat(pid: int) -> tuple[int, float, int] | None:
     return ppid, (utime + stime + cutime + cstime) / _TICKS, rss
 
 
+def steal() -> tuple[int, int]:
+    """(all, stolen) CPU ticks of the host since boot, from /proc/stat:
+    the share stolen by the hypervisor over a window shows how much of
+    the window other guests of the machine took."""
+    with open("/proc/stat") as f:
+        ticks = [int(x) for x in f.readline().split()[1:]]
+    return sum(ticks[:8]), ticks[7]
+
+
 def _pids() -> set[int]:
     return {int(d) for d in os.listdir("/proc") if d.isdigit()}
 
 
 class ProcTree:
-    """Descendants of ``root`` (``root`` itself excluded unless asked)."""
+    """The descendants of this process (the process itself excluded)."""
 
-    def __init__(self, root: int | None = None, include_root: bool = False):
-        self.root = os.getpid() if root is None else root
-        self.include_root = include_root
+    def __init__(self):
+        self.root = os.getpid()
         self._cpu_high = 0.0
 
     def _read(self) -> dict[int, tuple[int, float, int]]:
@@ -60,8 +68,7 @@ class ProcTree:
         children: dict[int, list[int]] = {}
         for pid, (ppid, _, _) in stats.items():
             children.setdefault(ppid, []).append(pid)
-        todo = [self.root] if self.include_root else \
-            list(children.get(self.root, []))
+        todo = list(children.get(self.root, []))
         cpu, rss = 0.0, 0
         while todo:
             pid = todo.pop()

@@ -23,10 +23,12 @@ def test_transcripts_equal_gen_transcripts(spark, tmp_path):
                                   want.reset_index(drop=True))
 
 
-def test_refresh_slices_are_equal_sized_and_in_order(tmp_path):
+def test_refresh_slices_are_equal_sized_and_in_order(tmp_path, monkeypatch):
+    monkeypatch.setattr(prepare, "N_SLICES", 4)
     out = str(tmp_path / "tr")
     os.makedirs(out)
     meta = prepare._transcripts(5, 60_000, out)
+    assert len(meta["slice_turns"]) == 4
     assert len(set(meta["slice_turns"])) == 1
     prev = pq.read_table(os.path.join(out, "bronze.parquet")).to_pandas()
     assert len(prev) == meta["bronze_turns"]

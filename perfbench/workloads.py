@@ -1,4 +1,4 @@
-"""The three workloads: tier_rollup, refresh_append and query_suite.
+"""The benchmark's workloads: tier_rollup and query_suite.
 
 Each workload drives the engine only through its public functions and
 implements the hooks :class:`harness.Runner` calls:
@@ -9,6 +9,9 @@ implements the hooks :class:`harness.Runner` calls:
 - ``op()``: one timed op; returns the input turns it processed;
 - ``check()``: the untimed output check of the op just run;
 - ``final_check()``: the once-per-run check after the timed ops;
+- ``traced_ops()``: extra work of a traced run only, returning each
+  op's check and the once-per-run check (tier_rollup: the write path
+  of :class:`WritePath`);
 - ``e2e_metrics`` / ``layer_metrics``: workload-specific metrics.
 """
 
@@ -22,6 +25,7 @@ import shutil
 import sys
 
 import numpy as np
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from yahoo_anomaly_detection_spark import caching
@@ -41,6 +45,7 @@ from yahoo_anomaly_detection_spark.sources.ingest import bronze_transcripts
 from harness import layer_row, median
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+POINT_COLS = ("conv_id", "ts", "value")  # a latency point
 
 
 def _import_path(name: str, path: str):
@@ -50,15 +55,20 @@ def _import_path(name: str, path: str):
     return mod
 
 
-def _fingerprint(df):
-    """Order-free multiset fingerprint of (conv_id, ts, value) rows."""
-    h = F.xxhash64("conv_id", "ts", "value").cast("decimal(38,0)")
-    row = df.agg(F.count(F.lit(1)), F.sum(h)).collect()[0]
+def _fingerprint_exprs(cols):
+    """Aggregates of an order-free multiset fingerprint of ``cols``:
+    the row count and the sum of each row's xxhash64."""
+    h = F.xxhash64(*cols).cast("decimal(38,0)")
+    return [F.count(F.lit(1)).alias("n"), F.sum(h).alias("h")]
+
+
+def _fingerprint(df, cols):
+    row = df.agg(*_fingerprint_exprs(cols)).collect()[0]
     return int(row[0]), row[1]
 
 
 class Workload:
-    max_warmup = 0  # warm-up rounds at most, after warmup()
+    warmup_rounds = 0  # untimed rounds after warmup()
     round_ops = 1  # ops in one pass over the workload's op list
 
     def __init__(self, inputs_dir: str, scratch: str):
@@ -66,6 +76,9 @@ class Workload:
         self.scratch = scratch
         with open(os.path.join(inputs_dir, "meta.json")) as f:
             self.meta = json.load(f)
+
+    def traced_ops(self) -> tuple[list[bool], bool]:
+        return [], True
 
     def release(self, spark) -> None:
         caching.release_all()
@@ -84,7 +97,7 @@ class TierRollup(Workload):
     scratch parquet (as ``jobs/rollup_job.py --sink noop``), 1h and 1d
     by cascade, Gorilla encode per (conv, hour) and decode."""
 
-    max_warmup = 2
+    warmup_rounds = 1
 
     def load(self, spark, tracer) -> None:
         self.spark, self.tracer = spark, tracer
@@ -96,7 +109,7 @@ class TierRollup(Workload):
 
     def warmup(self) -> int:
         self.expected = _fingerprint(
-            self._points().where(F.col("value").isNotNull()))
+            self._points().where(F.col("value").isNotNull()), POINT_COLS)
         return 0
 
     def op(self) -> int:
@@ -117,7 +130,8 @@ class TierRollup(Workload):
                 self._path("enc"))
         with span("codec", "decode"):
             self.decoded = _fingerprint(
-                decompress_buckets(spark.read.parquet(self._path("enc"))))
+                decompress_buckets(spark.read.parquet(self._path("enc"))),
+                POINT_COLS)
         return self.meta["turns"]
 
     def check(self) -> bool:
@@ -133,9 +147,15 @@ class TierRollup(Workload):
         self.bytes_per_point = enc[0] / enc[1]
         return True
 
+    def traced_ops(self) -> tuple[list[bool], bool]:
+        self.write = WritePath(self.spark, self.tracer, self.inputs_dir,
+                               self.meta, self._path("warehouse"))
+        return self.write.run()
+
     def layer_metrics(self, groups, n, spans) -> dict:
         out = layer_row(groups, "rollup", n)
         out.update(layer_row(groups, "codec", n))
+        out.update(self.write.layer_metrics(groups, spans))
         codec = groups.get("timed:codec")
         out.update({
             "rollup.rows_1m": (self.rows_1m, "count"),
@@ -147,40 +167,57 @@ class TierRollup(Workload):
         return out
 
 
-class RefreshAppend(Workload):
-    """Write path: ``catalog.append`` of the next event-time slice into
-    the bronze table, then ``refresh_once``. The warehouse (20 days of
-    bronze plus its initial refresh) is rebuilt identically at the
-    start of every run, so every run replays the same commit log."""
+class WritePath:
+    """The write path, run once by every traced tier_rollup run:
+    ``catalog.append`` of the next event-time slice into the bronze
+    table, then ``refresh_once``, for each prepared slice in order.
 
-    def load(self, spark, tracer) -> None:
+    The warehouse (the bronze days before the slices, plus its initial
+    refresh) is built from the cached input at the start, so every run
+    replays the same commit log. Each cycle is checked (incremental
+    mode, bronze head processed); once per run the refreshed tiers are
+    compared with a full recompute of the final bronze."""
+
+    def __init__(self, spark, tracer, inputs_dir, meta, root):
         self.spark, self.tracer = spark, tracer
+        self.inputs_dir, self.meta, self.root = inputs_dir, meta, root
         self.refresh_job = _import_path(
             "refresh_job", os.path.join(ROOT, "jobs", "refresh_job.py"))
-        self.root = self._path("warehouse")
-        self.catalog = ParquetCatalog(self.root)
-        self.bronze = spark.read.parquet(
-            os.path.join(self.inputs_dir, "bronze.parquet"))
+        self.catalog = ParquetCatalog(root)
+
+    def run(self) -> tuple[list[bool], bool]:
+        tracer = self.tracer
+        tracer.phase = "write-setup"
+        shutil.rmtree(self.root, ignore_errors=True)
+        os.makedirs(self.root)
+        self._append(os.path.join(self.inputs_dir, "bronze.parquet"))
+        self._refresh()
+        self.files, self.snaps = self._files(), self._snapshot_ids()
+        self.stats: list[dict] = []
+        tracer.phase = "timed"
+        oks = []
+        for k in range(len(self.meta["slice_turns"])):
+            try:
+                with tracer.span("catalog"):
+                    self._append(os.path.join(self.inputs_dir,
+                                              f"slice_{k}.parquet"))
+                with tracer.span("refresh"):
+                    m = self._refresh()
+                oks.append(self._check(m))
+            except Exception as e:  # a failed cycle is counted
+                print(f"write cycle failed: {e!r}"[:2000], file=sys.stderr)
+                oks.append(False)
+        tracer.phase = "check"
+        return oks, self._final_check()
 
     def _refresh(self) -> dict:
         # refresh_once prints its metrics line; keep stdout for the result
         with contextlib.redirect_stdout(sys.stderr):
             return self.refresh_job.refresh_once(self.spark, self.catalog)
 
-    def _append(self, df) -> None:
-        self.catalog.append(bronze_transcripts(df), "transcripts",
-                            partition_by=["day"])
-
-    def warmup(self) -> int:
-        shutil.rmtree(self.root, ignore_errors=True)
-        os.makedirs(self.root)
-        self._append(self.bronze)
-        self._refresh()
-        self.next_slice = 0
-        self.files = self._files()
-        self.snaps = self._snapshot_ids()
-        self.stats: list[dict] = []
-        return 1
+    def _append(self, path: str) -> None:
+        self.catalog.append(bronze_transcripts(self.spark.read.parquet(path)),
+                            "transcripts", partition_by=["day"])
 
     def _files(self) -> set[str]:
         return {os.path.join(d, f) for d, _, fs in os.walk(self.root)
@@ -190,20 +227,9 @@ class RefreshAppend(Workload):
         return {s.snapshot_id for t in os.listdir(self.root)
                 for s in self.catalog.snapshots(t)}
 
-    def op(self) -> int:
-        k = self.next_slice
-        self.next_slice += 1
-        span = self.tracer.span
-        with span("catalog"):
-            self._append(self.spark.read.parquet(
-                os.path.join(self.inputs_dir, f"slice_{k}.parquet")))
-        with span("refresh"):
-            self.m = self._refresh()
-        return self.meta["slice_turns"][k]
-
-    def check(self) -> bool:
+    def _check(self, m: dict) -> bool:
         files, snaps = self._files(), self._snapshot_ids()
-        st = self.m["stages"]
+        st = m["stages"]
         tier_s = sum(v for k, v in st.items()
                      if k.startswith("tier_") and not k.endswith("_rows"))
         self.stats.append({
@@ -211,11 +237,11 @@ class RefreshAppend(Workload):
             "delta_1m_s": st.get("delta_1m", 0.0), "tier_s": tier_s,
             "tails_s": st.get("tails", 0.0)})
         self.files, self.snaps = files, snaps
-        return (self.m["mode"] == "incremental"
-                and self.m["processed_snapshot"]
+        return (m["mode"] == "incremental"
+                and m["processed_snapshot"]
                 == self.catalog.current_snapshot_id("transcripts"))
 
-    def final_check(self) -> bool:
+    def _final_check(self) -> bool:
         """Refreshed tiers equal a full recompute of the final bronze."""
         spark, cat = self.spark, self.catalog
         self.read_paths = len(cat.snapshots("transcripts")[-1].paths)
@@ -228,7 +254,8 @@ class RefreshAppend(Workload):
             ok &= _same_tier(full, cat.read(spark, f"tier_{tier}"))
         return ok
 
-    def layer_metrics(self, groups, n, spans) -> dict:
+    def layer_metrics(self, groups, spans) -> dict:
+        n = len(self.meta["slice_turns"])
         out = layer_row(groups, "catalog", n)
         out.update(layer_row(groups, "refresh", n))
 
@@ -265,16 +292,20 @@ def _same_tier(a, b) -> bool:
 
 
 # The registry queries timed by query_suite, run in this order every pass.
-QUERIES = ("rollup_1m", "ewma_1m", "sessionize", "weighted_sample")
+QUERIES = ("ewma_1m", "sessionize", "weighted_sample")
 DOC_QUERIES = {"weighted_sample"}
 
 
 class QuerySuite(Workload):
     """Read path: each op builds one registry query and materializes it
-    with the noop sink. The first pass, untimed, collects every output
-    and compares it with the query's ``oracle_sql()`` result."""
+    with the noop sink. The untimed first pass collects every output,
+    compares it with the query's ``oracle_sql()`` result and observes
+    the output's fingerprint (row count and Σxxhash64 over all
+    columns). Every timed op observes the same fingerprint of its own
+    output during its noop write, and passes its check if the two are
+    equal."""
 
-    round_ops = len(QUERIES)
+    round_ops = len(QUERIES)  # the oracle pass is the warm-up
 
     def load(self, spark, tracer) -> None:
         self.spark, self.tracer = spark, tracer
@@ -296,17 +327,20 @@ class QuerySuite(Workload):
         for t in ("events", "documents"):
             p = os.path.join(self.sf, f"{t}.parquet")
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
-        self.ok = {}
+        self.expected = {}
         for q in QUERIES:
+            obs = Observation(q)
             try:
-                got = self.registry[q](self.spark, self.sf).toPandas()
+                df = self.registry[q](self.spark, self.sf)
+                got = df.observe(obs, *_fingerprint_exprs(df.columns)) \
+                    .toPandas()
                 want = con.execute(self.oracles[q]).fetchdf()
                 verdict = check_oracle.compare(q, got, want)
             except Exception as e:  # counted as failed ops of this query
                 verdict = f"ERROR {e!r}"[:2000]
-            self.ok[q] = verdict == "OK"
-            if not self.ok[q]:
+            if verdict != "OK":
                 print(f"{q}: {verdict}", file=sys.stderr)
+            self.expected[q] = obs.get if verdict == "OK" else None
             self.release(self.spark)
         con.close()
         self.i = 0
@@ -317,16 +351,19 @@ class QuerySuite(Workload):
         self.i += 1
         with self.tracer.span("registry", "build"):
             df = self.registry[self.q](self.spark, self.sf)
+        self.observed = Observation(self.q)
         with self.tracer.span("registry", "action"):
-            df.write.format("noop").mode("overwrite").save()
+            df.observe(self.observed, *_fingerprint_exprs(df.columns)) \
+                .write.format("noop").mode("overwrite").save()
         n = "documents" if self.q in DOC_QUERIES else "events"
         return self.meta[n]
 
     def check(self) -> bool:
-        return self.ok[self.q]
+        want = self.expected[self.q]
+        return want is not None and self.observed.get == want
 
     def final_check(self) -> bool:
-        return all(self.ok.values())
+        return all(v is not None for v in self.expected.values())
 
     def e2e_metrics(self, times, turns) -> dict:
         return {"turns_per_s": (sum(turns) / sum(times), "1/s"),
@@ -349,6 +386,5 @@ def _per_query_total(times: list[float]) -> float:
 
 WORKLOADS = {
     "tier_rollup": (TierRollup, "transcripts"),
-    "refresh_append": (RefreshAppend, "transcripts"),
     "query_suite": (QuerySuite, "sf"),
 }
